@@ -75,6 +75,12 @@ object Bpe {
     * could confuse the scan — a freshly merged element colliding with
     * `a` — is impossible: `a + b` is strictly longer than `a` since
     * symbols are non-empty.
+    *
+    * Scaling limit: every step of the fold builds a new accumulator
+    * array (`concat`/`slice` copy the whole prefix), so one row costs
+    * O(L²) in its symbol-array length L. That is cheap for word-level
+    * rows (L is a word's length); a caller merging long sequences —
+    * document-level byte BPE, say — needs a linear per-row scan instead.
     */
   def applyMerge(syms: DataFrame, a: String, b: String): DataFrame = {
     val merged = a + b

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1236,31 +1237,19 @@ object Ivf {
     * ([[roundKey]] replicates Spark `round`'s HALF_UP double
     * semantics, RoundKeySpec pins the equality) — so fused results are
     * IDENTICAL to the declarative twin on every input, including
-    * raw-distance ties at the k boundary that round equal. Probe
-    * formation, partition pruning, and the queries-broadcast are
-    * identical to the declarative path; `mapPartitions` is used
-    * exactly per the custom-operator ladder — the semantics (fused
-    * multi-query scan + bounded heaps) have no declarative expression.
+    * raw-distance ties at the k boundary that round equal. Probes are
+    * formed EAGERLY by [[fusedProbes]] (one narrow pass over the
+    * queries, no window and no shuffle) and pick the same cells as the
+    * declarative path's in-plan [[batchProbePairsWith]]; the scan is
+    * partition-pruned to their union. `mapPartitions` is used exactly
+    * per the custom-operator ladder — the semantics (fused multi-query
+    * scan + bounded heaps) have no declarative expression.
     */
   def topKPartitionedBatchFused(spark: org.apache.spark.sql.SparkSession, dir: String,
                                 queries: DataFrame, k: Int, nprobe: Int,
                                 roundTo: Int = 6): DataFrame = {
     import spark.implicits._
-    val (stored, cents) = readLayoutWithCentroids(spark, dir) // one-version pin
-    val probePairs = batchProbePairsWith(cents, queries, nprobe)
-    val unionCells = probePairs.select("cell").distinct().collect().map(_.getLong(0))
-    // per-cell query lists: the same Q·nprobe payload the declarative
-    // path ships through its BroadcastExchange (a broadcast IS a
-    // driver collect in Spark), grouped for O(1) cell lookup
-    val qByCell: Map[Long, Array[(Long, Array[Double])]] =
-      probePairs.join(queries, Seq("query_id"))
-        .select(col("cell"), col("query_id"), col("query_vec"))
-        .as[(Long, Long, Array[Double])].collect()
-        .groupBy(_._1).map { case (c, arr) => c -> arr.map(t => (t._2, t._3)) }
-    val bc = spark.sparkContext.broadcast(qByCell)
-    val pruned = stored
-      .filter(col("cell").isin(unionCells.toIndexedSeq: _*)) // partition-pruned
-      .select(col("cell"), col("vec_id"), col("embedding"))
+    val (pruned, bc) = fusedScan(spark, dir, queries, nprobe)
     val perTask = pruned.as[(Long, Long, Array[Float])].mapPartitions { rows =>
       val heaps = new java.util.HashMap[Long, graft.functions.TopKHeap]()
       rows.foreach { case (cell, vid, emb) =>
@@ -1311,8 +1300,9 @@ object Ivf {
     * (use [[roundKey]]), so heap selection — ties at the k boundary
     * included — is exactly the declarative twin's (key asc, vec_id
     * asc). Returns `(query_id, vec_id, key)`; callers project the
-    * final score column (negation only — IEEE-exact). Same
-    * probe/pruning and fold arithmetic as
+    * final score column (negation only — IEEE-exact). Same eager
+    * probes ([[fusedProbes]] over the PREPARED queries, so they route
+    * in the layout's vector space), pruning and fold arithmetic as
     * [[topKPartitionedBatchFused]].
     */
   private def fusedHeapBatchDouble(spark: org.apache.spark.sql.SparkSession, dir: String,
@@ -1320,18 +1310,8 @@ object Ivf {
                                   (score: (Array[Double], Array[Double]) => Double)
       : DataFrame = {
     import spark.implicits._
-    val (stored, cents) = readLayoutWithCentroids(spark, dir) // one-version pin
-    val probePairs = batchProbePairsWith(cents, qPrepared, nprobe)
-    val unionCells = probePairs.select("cell").distinct().collect().map(_.getLong(0))
-    val qByCell: Map[Long, Array[(Long, Array[Double])]] =
-      probePairs.join(qPrepared, Seq("query_id"))
-        .select(col("cell"), col("query_id"), col("query_vec"))
-        .as[(Long, Long, Array[Double])].collect()
-        .groupBy(_._1).map { case (c, arr) => c -> arr.map(t => (t._2, t._3)) }
-    val bc = spark.sparkContext.broadcast(qByCell)
-    val perTask = stored
-      .filter(col("cell").isin(unionCells.toIndexedSeq: _*)) // partition-pruned
-      .select(col("cell"), col("vec_id"), col("embedding"))
+    val (pruned, bc) = fusedScan(spark, dir, qPrepared, nprobe)
+    val perTask = pruned
       .as[(Long, Long, Array[Double])].mapPartitions { rows =>
         val heaps = new java.util.HashMap[Long, graft.functions.TopKHeap]()
         rows.foreach { case (cell, vid, emb) =>
@@ -1353,6 +1333,75 @@ object Ivf {
         }
       }.toDF("query_id", "vec_id", "key")
     heapTopKPerQuery(perTask, k, "key") // merge the ≤ tasks·k rows per query
+  }
+
+  /** The fused kernels' serving state, data and routing pinned to ONE
+    * manifest version ([[readLayoutWithCentroids]]): the live rows
+    * `(cell, vec_id, embedding)` partition-pruned to the union of the
+    * batch's probed cells, and the broadcast per-cell query lists of
+    * [[fusedProbes]].
+    */
+  private def fusedScan(spark: org.apache.spark.sql.SparkSession, dir: String,
+                        queries: DataFrame, nprobe: Int)
+      : (DataFrame, Broadcast[Map[Long, Array[(Long, Array[Double])]]]) = {
+    val (stored, cents) = readLayoutWithCentroids(spark, dir)
+    val qByCell = fusedProbes(spark, cents, queries, nprobe)
+    val pruned = stored
+      .filter(col("cell").isin(qByCell.keys.toSeq.sorted: _*)) // partition-pruned
+      .select(col("cell"), col("vec_id"), col("embedding"))
+    (pruned, spark.sparkContext.broadcast(qByCell))
+  }
+
+  /** EAGER probe formation for the fused kernels: each query's
+    * `nprobe` nearest cells, returned grouped per cell as
+    * `cell -> [(query_id, query_vec)]` for O(1) lookup in the scan
+    * loop. The C-row centroid sidecar is collected once and broadcast;
+    * ONE narrow `mapPartitions` over the queries ranks it per query
+    * with the same double fold and `sqrt` as `l2Distance`, ties to the
+    * smaller `centroid_id` — exactly [[batchProbePairsWith]]'s cells,
+    * without its crossJoin, rank window and shuffle — and ONE collect
+    * brings back the Q·(d + nprobe) payload a BroadcastExchange would
+    * ship anyway. A query whose length differs from the centroids'
+    * fails fast: the scan loop would otherwise index past a short
+    * query, or score a long one on a prefix.
+    */
+  private[operators] def fusedProbes(spark: org.apache.spark.sql.SparkSession,
+                                     cents: DataFrame, queries: DataFrame,
+                                     nprobe: Int): Map[Long, Array[(Long, Array[Double])]] = {
+    import spark.implicits._
+    val cs = cents.select(col("centroid_id"), col("centroid_vec"))
+      .as[(Long, Array[Double])].collect()
+    val dim = cs.headOption.fold(0)(_._2.length)
+    val np = math.min(nprobe, cs.length)
+    val bcCents = spark.sparkContext.broadcast(cs)
+    val probed = queries.select(col("query_id"), col("query_vec"))
+      .as[(Long, Array[Double])].mapPartitions { qs =>
+        val cs = bcCents.value
+        qs.map { case (qid, qv) =>
+          val cells =
+            if (np <= 0 || qv == null || qv.length != dim) Array.empty[Long]
+            else {
+              val h = new graft.functions.TopKHeap(np) // (dist, centroid_id) order
+              var c = 0
+              while (c < cs.length) {
+                val cv = cs(c)._2
+                var s = 0.0; var j = 0
+                while (j < dim) { val d = cv(j) - qv(j); s += d * d; j += 1 }
+                h.offer(math.sqrt(s), cs(c)._1)
+                c += 1
+              }
+              h.sorted.map(_._2)
+            }
+          (qid, qv, cells)
+        }
+      }.collect()
+    bcCents.destroy()
+    if (cs.nonEmpty) probed.foreach { case (qid, qv, _) =>
+      val n = if (qv == null) 0 else qv.length
+      require(n == dim, s"query $qid: query_vec has $n dims but the layout's centroids have $dim")
+    }
+    probed.flatMap { case (qid, qv, cells) => cells.map(c => (c, (qid, qv))) }
+      .groupBy(_._1).map { case (c, arr) => c -> arr.map(_._2) }
   }
 
   /** FUSED batch cosine over an [[ensurePartitionedCosine]] layout —
